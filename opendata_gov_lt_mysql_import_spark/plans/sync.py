@@ -3,26 +3,36 @@ idempotently (reference J4-J7 + F5 + the per-row create_or_update sinks,
 /root/reference/odgovlt.py:205-211, 249-255, 276-287, 312-318, 407).
 
 The reference interleaves existence probes and API writes row by row.
-Here the three sets are computed declaratively (anti joins + the
-canonical-JSON changed-rows diff) and applied through a batched
-``foreachPartition`` sink — Catalyst plans the reads, only the final
-writes are imperative. Ordering constraints for hierarchies (parents
-before children on create, children before parents on delete) are
-satisfied by applying per topological depth, ascending or descending.
+Here a sync is one tagged change frame: a single full outer key join of
+the incoming documents and the existing rows, each output row carrying
+the incoming document (``_new``), the existing row (``_old``) and its
+``_change_kind``, filtered to changed rows. The asymmetric diff of
+``was_changed`` is a canonical-JSON comparison over the incoming side's
+fields; the ownership predicate is evaluated over the existing side.
+
+Applying a plan evaluates that frame ONCE: it is persisted, one summary
+aggregate over (kind, depth) fills the cache and yields the phase levels,
+and every sink write then reads the cached changed rows — the document
+DAG (source reads, UDFs, joins) is not re-run per write phase. Ordering
+constraints for hierarchies (parents before children on create, children
+before parents on delete) are satisfied by applying per topological
+depth, ascending or descending.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.diff import changed_rows
-from ..operators.joins import stale_rows
+from ..functions.diff import _canonical
+
+KINDS = ("create", "update", "delete")
 
 
 def ensure_harvest_user(users: DataFrame, name: str = "harvest") -> DataFrame:
@@ -51,16 +61,68 @@ def ensure_harvest_user(users: DataFrame, name: str = "harvest") -> DataFrame:
 
 @dataclass
 class SyncPlan:
-    creates: DataFrame
-    updates: DataFrame
-    deletes: DataFrame
+    """One sync as a tagged change frame. ``changes`` holds one row per
+    changed entity: ``_change_kind`` ('create' | 'update' | 'delete'),
+    ``_new`` (the incoming document; null for deletes) and ``_old`` (the
+    existing row; null for creates). The per-kind frames are projections
+    of it, so every consumer shares one plan."""
+
+    changes: DataFrame
+
+    def rows(self, kind: str, where: Column | None = None) -> DataFrame:
+        """Changed rows of one kind: the incoming documents for creates and
+        updates, the existing rows for deletes."""
+        frame = self.changes.filter(F.col("_change_kind") == kind)
+        if where is not None:
+            frame = frame.filter(where)
+        return frame.select("_old.*" if kind == "delete" else "_new.*")
+
+    @property
+    def creates(self) -> DataFrame:
+        return self.rows("create")
+
+    @property
+    def updates(self) -> DataFrame:
+        return self.rows("update")
+
+    @property
+    def deletes(self) -> DataFrame:
+        return self.rows("delete")
+
+    def depth(self, depth_col: str | None) -> Column:
+        """A change's topological level: ``depth_col`` of the incoming
+        document for creates, of the existing row for deletes; null for
+        updates, without ``depth_col``, or when that side lacks it."""
+        if depth_col is None:
+            return F.lit(None)
+        level = {}
+        for kind, side in (("create", "_new"), ("delete", "_old")):
+            fields = self.changes.schema[side].dataType.fieldNames()
+            level[kind] = F.col(side)[depth_col] if depth_col in fields else None
+        kind = F.col("_change_kind")
+        return F.when(kind == "create", level["create"]).when(
+            kind == "delete", level["delete"]
+        )
+
+    def summary(self, depth_col: str | None = None) -> dict[tuple[str, object], int]:
+        """Changed rows per (kind, depth level), from ONE aggregate job."""
+        rows = (
+            self.changes.groupBy("_change_kind", self.depth(depth_col).alias("_depth"))
+            .count()
+            .collect()
+        )
+        return {(r[0], r[1]): r[2] for r in rows}
 
     def counts(self) -> dict[str, int]:
-        return {
-            "create": self.creates.count(),
-            "update": self.updates.count(),
-            "delete": self.deletes.count(),
-        }
+        """Rows per change kind, from one aggregate job."""
+        return _per_kind(self.summary())
+
+
+def _per_kind(levels: dict[tuple[str, object], int]) -> dict[str, int]:
+    counts = dict.fromkeys(KINDS, 0)
+    for (kind, _), n in levels.items():
+        counts[kind] += n
+    return counts
 
 
 def plan_sync(
@@ -68,21 +130,49 @@ def plan_sync(
     existing: DataFrame,
     key: str | Sequence[str],
     compare_fields: Sequence[str] | None = None,
-    ownership_filter=None,
+    ownership_filter: Column | None = None,
 ) -> SyncPlan:
-    """Split a sync into create/update/delete DataFrames.
+    """Tag a sync's changed rows in one full outer key join.
 
     - create: incoming keys absent from existing;
     - update: present but changed on incoming's fields (asymmetric diff —
       fields only the sink carries don't trigger updates);
     - delete: existing keys absent from incoming, gated by the ownership
-      predicate (never delete rows another pipeline owns).
+      predicate over existing's columns (never delete rows another
+      pipeline owns).
+
+    Null keys never match, so a null-keyed incoming row is a create and a
+    null-keyed existing row a (gated) delete.
     """
-    changed = changed_rows(incoming, existing, key, compare_fields)
-    creates = changed.filter(F.col("_change_kind") == "create").drop("_change_kind")
-    updates = changed.filter(F.col("_change_kind") == "update").drop("_change_kind")
-    deletes = stale_rows(existing, incoming, on=key, ownership_filter=ownership_filter)
-    return SyncPlan(creates=creates, updates=updates, deletes=deletes)
+    keys = [key] if isinstance(key, str) else list(key)
+    fields = [c for c in (compare_fields or incoming.columns) if c not in keys]
+
+    new = incoming.select(
+        *[F.col(k).alias(f"_nk{i}") for i, k in enumerate(keys)],
+        F.struct(*incoming.columns).alias("_new"),
+        _canonical(incoming, fields).alias("_canon_new"),
+    )
+    old = existing.select(
+        *[F.col(k).alias(f"_ok{i}") for i, k in enumerate(keys)],
+        F.struct(*existing.columns).alias("_old"),
+        _canonical(existing, fields).alias("_canon_old"),
+        (F.lit(True) if ownership_filter is None else ownership_filter).alias("_owned"),
+    )
+    cond = F.lit(True)
+    for i in range(len(keys)):
+        cond = cond & (F.col(f"_nk{i}") == F.col(f"_ok{i}"))
+
+    kind = (
+        F.when(F.col("_old").isNull(), F.lit("create"))
+        .when(F.col("_new").isNull(), F.when(F.col("_owned"), F.lit("delete")))
+        .when(F.col("_canon_new") != F.col("_canon_old"), F.lit("update"))
+    )
+    changes = (
+        new.join(old, on=cond, how="full_outer")
+        .select(kind.alias("_change_kind"), "_new", "_old")
+        .filter(F.col("_change_kind").isNotNull())
+    )
+    return SyncPlan(changes)
 
 
 def apply_batched(
@@ -109,49 +199,78 @@ def apply_batched(
     df.foreachPartition(run_partition)
 
 
+@contextmanager
+def _job_description(spark, text: str) -> Iterator[None]:
+    """Label the jobs started inside the block (``spark.job.description``)
+    so the event log and UI attribute them; other local properties, such
+    as a caller's job group, are left alone."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)
+
+
+@contextmanager
+def _evaluated_once(plan: SyncPlan) -> Iterator[None]:
+    """Persist the change frame for the block (default storage level,
+    MEMORY_AND_DISK): the first job over it fills the cache and every
+    later write reads the cached changed rows instead of re-running the
+    document DAG."""
+    plan.changes.persist()
+    try:
+        yield
+    finally:
+        plan.changes.unpersist()
+
+
+def _phase_order(levels) -> list[tuple[str, object]]:
+    """(kind, depth) phases in write order: creates parents first, then
+    updates, then deletes children first. A null depth sorts as the
+    shallowest level."""
+    order = []
+    for kind in KINDS:
+        depths = sorted(
+            (d for k, d in levels if k == kind), key=lambda d: (d is not None, d)
+        )
+        order += [(kind, d) for d in (reversed(depths) if kind == "delete" else depths)]
+    return order
+
+
 def apply_sync_ordered(
     plan: SyncPlan,
     sink: Callable[[str, list[dict]], None],
     depth_col: str | None = None,
     batch_size: int = 500,
-) -> None:
+) -> dict[str, int]:
     """Apply creates (parents first), updates, then deletes (children
     first). With ``depth_col`` the create/delete phases iterate depth
     levels so hierarchical sinks see parents before children — bounded by
-    tree depth, not data size (the per-level frames are already computed
-    by one plan; iteration only sequences the writes)."""
+    tree depth, not data size.
+
+    The change frame is evaluated once: it is persisted, one summary job
+    over (kind, depth) fills the cache and yields the levels (empty
+    phases are skipped), and each phase's write reads the cached rows.
+    Each phase's jobs carry the description ``sync <kind>[ depth=<d>]``.
+    Returns the applied counts per kind.
+    """
+    spark = plan.changes.sparkSession
 
     def by_kind(kind: str) -> Callable[[list[dict]], None]:
         return lambda batch: sink(kind, batch)
 
-    if depth_col and depth_col in plan.creates.columns:
-        depths = [
-            r[0]
-            for r in plan.creates.select(depth_col).distinct().orderBy(depth_col).collect()
-        ]
-        for d in depths:
-            apply_batched(
-                plan.creates.filter(F.col(depth_col) == d), by_kind("create"), batch_size
-            )
-    else:
-        apply_batched(plan.creates, by_kind("create"), batch_size)
-
-    apply_batched(plan.updates, by_kind("update"), batch_size)
-
-    if depth_col and depth_col in plan.deletes.columns:
-        depths = [
-            r[0]
-            for r in plan.deletes.select(depth_col)
-            .distinct()
-            .orderBy(F.desc(depth_col))
-            .collect()
-        ]
-        for d in depths:
-            apply_batched(
-                plan.deletes.filter(F.col(depth_col) == d), by_kind("delete"), batch_size
-            )
-    else:
-        apply_batched(plan.deletes, by_kind("delete"), batch_size)
+    with _evaluated_once(plan):
+        with _job_description(spark, "sync summary"):
+            levels = plan.summary(depth_col)
+        depth = plan.depth(depth_col)
+        for kind, d in _phase_order(levels):
+            rows = plan.rows(kind, where=depth.eqNullSafe(F.lit(d)))
+            label = f"sync {kind}" if d is None else f"sync {kind} depth={d}"
+            with _job_description(spark, label):
+                apply_batched(rows, by_kind(kind), batch_size)
+    return _per_kind(levels)
 
 
 class JsonDirSink:
@@ -176,13 +295,21 @@ _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _safe_ident(name: str) -> str:
-    """Validate a SQL identifier before interpolation. Validation, not
-    quoting: Derby (and most engines) fold unquoted identifiers to upper
-    case, so quoting here would stop matching tables the distributed JDBC
-    writer created unquoted."""
+    """Validate a SQL identifier before interpolation. Table names are
+    validated, not quoted: Derby (and most engines) fold unquoted
+    identifiers to upper case, so quoting would stop matching tables the
+    distributed JDBC writer created unquoted."""
     if not _IDENT_RE.match(name):
         raise ValueError(f"unsafe SQL identifier: {name!r}")
     return name
+
+
+def _column_quoter(spark, url: str) -> Callable[[str], str]:
+    """Quote column names with the URL's JDBC dialect (``"c"`` on Derby,
+    backticks on MySQL), as Spark's JDBC writer does when it creates the
+    table: an unquoted lowercase ``id`` would fold to ``ID`` and miss it."""
+    dialect = spark._jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(url)
+    return lambda name: dialect.quoteIdentifier(_safe_ident(name))
 
 
 def _jdbc_execute(spark, url: str, driver: str | None, *statements: str) -> None:
@@ -237,39 +364,50 @@ def apply_sync_jdbc(
     reference's create_or_update semantics, odgovlt.py:407), so sink-side
     columns outside the plan's schema would be lost.
 
+    Counts and writes come from ONE evaluation of the change frame, taken
+    before the first write: later phases read the cached changes, not the
+    target table that earlier phases already modified.
+
     Returns the applied counts per kind.
     """
     from ..sources.jdbc import write_jdbc_table
 
     stage = _safe_ident(staging_table or f"{table}_stage")
     table = _safe_ident(table)
-    key = _safe_ident(key)
-    counts = plan.counts()
+    quote = _column_quoter(spark, url)
+    qkey = quote(key)
+    delete_staged = (
+        f"DELETE FROM {table} WHERE {qkey} IN (SELECT {qkey} FROM {stage})"
+    )
 
-    if counts["create"]:
-        write_jdbc_table(
-            plan.creates, url, table, mode="append", driver=driver,
-            column_types=column_types,
-        )
-    if counts["update"]:
-        cols = ", ".join(_safe_ident(c) for c in plan.updates.columns)
-        write_jdbc_table(
-            plan.updates, url, stage, mode="overwrite", driver=driver,
-            column_types=column_types,
-        )
-        _jdbc_execute(
-            spark, url, driver,
-            f"DELETE FROM {table} WHERE {key} IN (SELECT {key} FROM {stage})",
-            f"INSERT INTO {table} ({cols}) SELECT {cols} FROM {stage}",
-        )
-    if counts["delete"]:
-        write_jdbc_table(
-            plan.deletes.select(key), url, stage, mode="overwrite", driver=driver,
-        )
-        _jdbc_execute(
-            spark, url, driver,
-            f"DELETE FROM {table} WHERE {key} IN (SELECT {key} FROM {stage})",
-        )
+    with _evaluated_once(plan):
+        with _job_description(spark, "sync summary"):
+            counts = plan.counts()
+        if counts["create"]:
+            with _job_description(spark, "sync create"):
+                write_jdbc_table(
+                    plan.creates, url, table, mode="append", driver=driver,
+                    column_types=column_types,
+                )
+        if counts["update"]:
+            cols = ", ".join(quote(c) for c in plan.updates.columns)
+            with _job_description(spark, "sync update"):
+                write_jdbc_table(
+                    plan.updates, url, stage, mode="overwrite", driver=driver,
+                    column_types=column_types,
+                )
+            _jdbc_execute(
+                spark, url, driver,
+                delete_staged,
+                f"INSERT INTO {table} ({cols}) SELECT {cols} FROM {stage}",
+            )
+        if counts["delete"]:
+            with _job_description(spark, "sync delete"):
+                write_jdbc_table(
+                    plan.deletes.select(key), url, stage, mode="overwrite",
+                    driver=driver,
+                )
+            _jdbc_execute(spark, url, driver, delete_staged)
     return counts
 
 

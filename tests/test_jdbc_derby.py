@@ -162,3 +162,38 @@ class TestJdbcSyncSink:
 
         final = sorted(tuple(r) for r in self._state(spark).collect())
         assert final == [(1, "keep", 10), (2, "updated", 20), (4, "created", 40)]
+
+    def test_lowercase_key_create_update_delete(self, spark):
+        """Spark's JDBC writer quotes column names, so a lowercase ``id``
+        stays lowercase in Derby; the driver-side upsert/delete statements
+        must quote it the same way (unquoted it folds to ``ID``)."""
+        from opendata_gov_lt_mysql_import_spark.plans.sync import (
+            apply_sync_jdbc,
+            plan_sync,
+        )
+
+        schema = "id int, title string"
+        table = "t_lower"
+
+        def sync(rows, current):
+            incoming = spark.createDataFrame(rows, schema)
+            return apply_sync_jdbc(
+                spark, plan_sync(incoming, current, key="id"), self.URL, table,
+                key="id", driver=DRIVER, column_types="title VARCHAR(64)",
+            )
+
+        def state():
+            return read_jdbc_table(spark, url=self.URL, table=table, driver=DRIVER)
+
+        first = [(1, "a"), (2, "b"), (3, "c")]
+        assert sync(first, spark.createDataFrame([], schema)) == {
+            "create": 3, "update": 0, "delete": 0
+        }
+        assert state().columns == ["id", "title"]
+        assert sync([(1, "a"), (2, "B"), (3, "c")], state()) == {
+            "create": 0, "update": 1, "delete": 0
+        }
+        assert sync([(1, "a"), (2, "B")], state()) == {
+            "create": 0, "update": 0, "delete": 1
+        }
+        assert sorted(tuple(r) for r in state().collect()) == [(1, "a"), (2, "B")]

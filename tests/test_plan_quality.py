@@ -1861,3 +1861,70 @@ def test_ann_recall_calibration_exact_side_runs_wide(
     assert "BroadcastHashJoin" in final_section, plan
     assert "CartesianProduct" not in final_section, plan
     assert "Exchange SinglePartition" not in final_section, plan
+
+
+def _sync_frames(spark):
+    """40 incoming documents against 40 existing rows: 10 creates, 6
+    updates, 10 deletes over three depth levels."""
+    incoming = spark.createDataFrame(
+        [(i, f"t{i}", i % 3) for i in range(40)], "id int, title string, depth int"
+    )
+    existing = spark.createDataFrame(
+        [(i, f"t{i}" if i % 5 else "old", i % 3) for i in range(10, 50)],
+        "id int, title string, depth int",
+    )
+    return incoming, existing
+
+
+def test_sync_apply_evaluates_incoming_once(spark, tmp_path):
+    """``apply_sync_ordered`` evaluates the change frame once: a Python
+    UDF in an incoming column runs exactly once per incoming row across
+    the summary and all seven write phases (the per-phase design ran it
+    three times per row here)."""
+    from pyspark.sql import functions as F
+
+    from opendata_gov_lt_mysql_import_spark.plans.sync import (
+        JsonDirSink,
+        apply_sync_ordered,
+        plan_sync,
+    )
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def touch(title):
+        calls.add(1)
+        return title
+
+    incoming, existing = _sync_frames(spark)
+    incoming = incoming.withColumn("title", F.udf(touch, "string")("title"))
+    counts = apply_sync_ordered(
+        plan_sync(incoming, existing, key="id"),
+        JsonDirSink(str(tmp_path / "sink")),
+        depth_col="depth",
+    )
+    assert counts == {"create": 10, "update": 6, "delete": 10}
+    assert calls.value == 40, f"incoming evaluated {calls.value / 40:.2f}× per row"
+
+
+def test_sync_no_change_apply_job_budget(spark, tmp_path):
+    """A sync with nothing to write schedules only its summary aggregate
+    (record 4: two join-side shuffles, the aggregate's shuffle, the
+    result); every empty phase is skipped. The per-phase design
+    scheduled 12 jobs for the same call."""
+    from opendata_gov_lt_mysql_import_spark.plans.sync import (
+        JsonDirSink,
+        apply_sync_ordered,
+        plan_sync,
+    )
+
+    incoming, _ = _sync_frames(spark)
+    sink = JsonDirSink(str(tmp_path / "sink"))
+    n_jobs = _count_scheduled_jobs(
+        spark,
+        lambda: apply_sync_ordered(
+            plan_sync(incoming, incoming, key="id"), sink, depth_col="depth"
+        ),
+        ceiling=4,
+    )
+    assert n_jobs <= 4, f"no-change sync scheduled {n_jobs} jobs (record 4)"
+    assert not (tmp_path / "sink").exists()
