@@ -14,9 +14,25 @@ plan per entity kind:
 Input is a dict of the five source tables (``sources.jdbc
 .read_reference_tables`` at production, synthesized DataFrames in tests) —
 the pipeline itself is source-agnostic.
+
+One ``HarvestPipeline`` is one snapshot of one harvest cycle, as the
+reference's gather stage stages each source row once and the import stage
+builds from that staged copy. The four document frames and the category
+nodes behind both the group documents and the package group lists are
+each built at most once per pipeline and materialized lazily: the first
+action over a frame computes it, and every later consumer (the sync
+summary and writes, the catalog export, the package frame's broadcast
+user/org joins) reads its blocks. So each source table is read once per
+cycle, and the sink and the catalog see the same rows even when the
+source changes between the sync and the export. Build one pipeline per
+cycle: its document frames never re-read the source. The materialized
+blocks live on the executors only, so a lost executor fails that cycle
+instead of recomputing it.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +52,7 @@ from ..operators.projections import (
     organization_document,
 )
 from ..sources.staging import stage_read, stage_write
+from .sync import _job_description
 
 
 def group_name_col(pavadinimas: F.Column, id_col: F.Column) -> F.Column:
@@ -45,30 +62,69 @@ def group_name_col(pavadinimas: F.Column, id_col: F.Column) -> F.Column:
 
 
 class HarvestPipeline:
-    """Set-oriented re-expression of the OdgovltHarvester lifecycle."""
+    """Set-oriented re-expression of the OdgovltHarvester lifecycle, as one
+    snapshot of one harvest cycle: build one pipeline per cycle.
+
+    ``package_documents()``, ``group_documents()``, ``user_documents()``,
+    ``organization_documents()`` and the category nodes are each built
+    once, on first call, and materialized lazily with
+    ``localCheckpoint(eager=False)``; their blocks are freed when the
+    frames are garbage-collected. The blocks live on the executors only:
+    a lost executor fails the cycle instead of recomputing it.
+    ``package_documents(datasets=...)``, ``active_datasets()``,
+    ``rejected_tags()`` and ``membership_edges()`` stay plain lazy plans
+    over the source tables (the published-dataset filter keeps its JDBC
+    pushdown)."""
 
     def __init__(self, spark: SparkSession, tables: dict[str, DataFrame]):
         self.spark = spark
         self.t = tables
+        self._frames: dict[str, DataFrame] = {}
+
+    def _once(self, label: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """``build()`` materialized lazily, built at most once per pipeline.
+        Building already runs the plan's shuffle and broadcast stages
+        (adaptive execution runs them when the checkpoint is planned);
+        those jobs, and the ones ``build`` starts itself, carry the
+        description ``harvest <label>``."""
+        if label not in self._frames:
+            with _job_description(self.spark, f"harvest {label}"):
+                self._frames[label] = build().localCheckpoint(eager=False)
+        return self._frames[label]
 
     # -- dimension documents ------------------------------------------------
 
     def user_documents(self) -> DataFrame:
-        return user_document(self.t["user"])
+        return self._once("user documents", lambda: user_document(self.t["user"]))
 
     def organization_documents(self) -> DataFrame:
-        return organization_document(self.t["istaiga"])
+        return self._once(
+            "organization documents", lambda: organization_document(self.t["istaiga"])
+        )
+
+    def _category_nodes(self) -> DataFrame:
+        """The category tree's nodes (id, parent_id, title) with their W2
+        group ``name``: the one source of group names for both the group
+        documents and the package group lists."""
+        return self._once(
+            "category nodes",
+            lambda: self.t["kategorija"]
+            .select(
+                F.col("ID").alias("id"),
+                F.col("KATEGORIJA_ID").alias("parent_id"),
+                F.col("PAVADINIMAS").alias("title"),
+            )
+            .withColumn("name", group_name_col(F.col("title"), F.col("id"))),
+        )
 
     def group_documents(self) -> DataFrame:
         """Category tree → CKAN group documents with child-group refs and
         topological depth for sink ordering (reference sync_group_tree,
         odgovlt.py:260-290, driven set-oriented here)."""
-        kat = self.t["kategorija"].select(
-            F.col("ID").alias("id"),
-            F.col("KATEGORIJA_ID").alias("parent_id"),
-            F.col("PAVADINIMAS").alias("title"),
-        )
-        named = kat.withColumn("name", group_name_col(F.col("title"), F.col("id")))
+        return self._once("group documents", self._group_documents)
+
+    def _group_documents(self) -> DataFrame:
+        named = self._category_nodes()
 
         closure = tree_closure(named, root_parent=0)
         depths = closure.select("id", "depth")
@@ -83,7 +139,7 @@ class HarvestPipeline:
             )
         )
 
-        docs = (
+        return (
             named.join(child_refs, on="id", how="left")
             .join(F.broadcast(depths), on="id", how="left")
             .select(
@@ -102,7 +158,6 @@ class HarvestPipeline:
                 F.col("depth"),
             )
         )
-        return docs
 
     # -- fact documents -----------------------------------------------------
 
@@ -114,8 +169,16 @@ class HarvestPipeline:
         """E3 assembly: dataset facts ⋈ broadcast user/org dims ⋈ group
         lists, projected into CKAN package documents. One plan; the
         reference's per-object N+1 lookups (odgovlt.py:373-407) appear as
-        two broadcast hash joins + one bridge aggregation."""
-        ds = datasets if datasets is not None else self.active_datasets()
+        two broadcast hash joins + one bridge aggregation.
+
+        Without ``datasets`` the frame is the published datasets' documents,
+        built once per pipeline; explicit ``datasets`` (the staging path)
+        get a fresh plan."""
+        if datasets is None:
+            return self._once(
+                "package documents",
+                lambda: self.package_documents(datasets=self.active_datasets()),
+            )
 
         users = self.user_documents().select(
             F.col("source_id").alias("USER_ID"),
@@ -127,19 +190,17 @@ class HarvestPipeline:
         )
         groups_per_ds = mn_bridge_collect(
             bridge=self.t["kategorija_rinkmena"],
-            dim=self.t["kategorija"].withColumn(
-                "_gname", group_name_col(F.col("PAVADINIMAS"), F.col("ID"))
-            ),
+            dim=self._category_nodes(),
             fact_key="ID",
             bridge_fact_key="RINKMENA_ID",
             bridge_dim_key="KATEGORIJA_ID",
-            dim_key="ID",
-            collect_col=F.col("_gname"),
+            dim_key="id",
+            collect_col=F.col("name"),
             alias="_group_names",
         )
 
         enriched = (
-            ds.join(F.broadcast(users), on="USER_ID", how="left")
+            datasets.join(F.broadcast(users), on="USER_ID", how="left")
             .join(F.broadcast(orgs), on="istaiga_id", how="left")
             .join(groups_per_ds, on="ID", how="left")
             .withColumn(

@@ -266,7 +266,8 @@ def apply_sync_ordered(
             levels = plan.summary(depth_col)
         depth = plan.depth(depth_col)
         for kind, d in _phase_order(levels):
-            rows = plan.rows(kind, where=depth.eqNullSafe(F.lit(d)))
+            where = None if depth_col is None else depth.eqNullSafe(F.lit(d))
+            rows = plan.rows(kind, where=where)
             label = f"sync {kind}" if d is None else f"sync {kind} depth={d}"
             with _job_description(spark, label):
                 apply_batched(rows, by_kind(kind), batch_size)

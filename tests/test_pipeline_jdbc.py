@@ -10,10 +10,19 @@ in-memory DataFrame run — the pipeline is source-agnostic by design.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from opendata_gov_lt_mysql_import_spark.plans.pipeline import HarvestPipeline
+from opendata_gov_lt_mysql_import_spark.plans.sync import (
+    JsonDirSink,
+    _jdbc_execute,
+    apply_sync_ordered,
+    export_with_observed_metrics,
+    plan_sync,
+)
 from opendata_gov_lt_mysql_import_spark.sources.jdbc import (
     REFERENCE_TABLES,
     read_reference_tables,
@@ -42,17 +51,23 @@ _VARCHAR = {
 }
 
 
-@pytest.fixture(scope="module")
-def jdbc_tables(spark):
+def _seed_derby(spark, url):
+    """Write the reference fixture into the Derby database at ``url`` and
+    bind it back through the JDBC source; returns (via JDBC, in memory)."""
     frames = build_reference_tables(spark)
     for alias, df in frames.items():
         write_jdbc_table(
-            df, URL, REFERENCE_TABLES[alias], mode="overwrite",
+            df, url, REFERENCE_TABLES[alias], mode="overwrite",
             driver=DRIVER, column_types=_VARCHAR[alias],
         )
     return read_reference_tables(
-        spark, URL, fact_partitions=4, driver=DRIVER, fact_upper_bound=100
+        spark, url, fact_partitions=4, driver=DRIVER, fact_upper_bound=100
     ), frames
+
+
+@pytest.fixture(scope="module")
+def jdbc_tables(spark):
+    return _seed_derby(spark, URL)
 
 
 def test_jdbc_schema_reflection(jdbc_tables):
@@ -97,3 +112,37 @@ def test_status_filter_pushed_to_jdbc(spark, jdbc_tables):
     plan = active._jdf.queryExecution().sparkPlan().toString()
     assert "PushedFilters" in plan and "STATUSAS" in plan, plan
     assert active.count() == 3  # the unpublished row never crosses the wire
+
+
+def test_sink_and_catalog_share_one_snapshot(spark, tmp_path):
+    """A source edit between a cycle's sync and its export reaches neither:
+    the catalog holds exactly the documents the sink received. Were the
+    export to re-read the source, the catalog would record the new title
+    the sink never got, and the next cycle's diff would find no change —
+    the update lost for good."""
+    url = "jdbc:derby:memory:pipeline_snapshot;create=true"
+    via_jdbc, _ = _seed_derby(spark, url)
+    docs = HarvestPipeline(spark, via_jdbc).package_documents()
+    sink = tmp_path / "sink"
+    apply_sync_ordered(
+        plan_sync(docs, spark.createDataFrame([], docs.schema), key="id"),
+        JsonDirSink(str(sink)),
+    )
+    _jdbc_execute(
+        spark, url, DRIVER,
+        f"UPDATE {REFERENCE_TABLES['rinkmena']} SET PAVADINIMAS = 'Pakeista' WHERE ID = 1",
+    )
+    catalog = str(tmp_path / "catalog")
+    export_with_observed_metrics(docs, catalog)
+
+    received = {}
+    for path in sink.glob("*.jsonl"):
+        for line in path.read_text(encoding="utf-8").splitlines():
+            row = json.loads(line)
+            received[row["id"]] = row["title"]
+    exported = {
+        r["id"]: r["title"]
+        for r in spark.read.parquet(catalog).select("id", "title").collect()
+    }
+    assert received["1"] == "Testinė rinkmena nr. 1"
+    assert exported == received

@@ -1300,7 +1300,9 @@ def _count_scheduled_jobs(spark, fn, ceiling: int | None = None) -> int:
     run's job count ~3× (observed: the perceptron at 57 once, 20 on
     every repeat), while a STRUCTURAL regression — a reintroduced
     per-round checkpoint/shuffle — inflates every run and still fails
-    both attempts."""
+    both attempts. When the two measurements differ, both are printed
+    (pytest shows them with ``-rP`` or on failure), so a recurring
+    near-ceiling first run becomes visible."""
     sc = spark.sparkContext
 
     def _measure(tag: str) -> int:
@@ -1317,7 +1319,10 @@ def _count_scheduled_jobs(spark, fn, ceiling: int | None = None) -> int:
 
     n_jobs = _measure("a")
     if ceiling is not None and n_jobs > ceiling:
-        n_jobs = min(n_jobs, _measure("b"))
+        retry = _measure("b")
+        if retry != n_jobs:
+            print(f"job-budget re-measure: first run {n_jobs}, second {retry} (ceiling {ceiling})")
+        n_jobs = min(n_jobs, retry)
     return n_jobs
 
 
@@ -1928,3 +1933,44 @@ def test_sync_no_change_apply_job_budget(spark, tmp_path):
     )
     assert n_jobs <= 4, f"no-change sync scheduled {n_jobs} jobs (record 4)"
     assert not (tmp_path / "sink").exists()
+
+
+def test_harvest_cycle_evaluates_each_source_row_once(spark, tmp_path):
+    """One ``HarvestPipeline`` builds its user documents once: a Python UDF
+    on ``t_user.LOGIN`` runs exactly once per user row across the package
+    and user syncs and both catalog exports (the package frame's broadcast
+    user join reads the same frame). Rebuilding the frames per action ran
+    it twice per row (4 calls for the fixture's 2 users)."""
+    from pyspark.sql import functions as F
+
+    from opendata_gov_lt_mysql_import_spark.plans.pipeline import HarvestPipeline
+    from opendata_gov_lt_mysql_import_spark.plans.sync import (
+        JsonDirSink,
+        apply_sync_ordered,
+        export_with_observed_metrics,
+        plan_sync,
+    )
+    from reference_fixture import build_reference_tables
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def touch(login):
+        calls.add(1)
+        return login
+
+    tables = build_reference_tables(spark)
+    n_users = tables["user"].count()
+    tables["user"] = tables["user"].withColumn("LOGIN", F.udf(touch, "string")("LOGIN"))
+    pipeline = HarvestPipeline(spark, tables)
+    for kind, df, key in (
+        ("package", pipeline.package_documents(), "id"),
+        ("user", pipeline.user_documents(), "name"),
+    ):
+        apply_sync_ordered(
+            plan_sync(df, spark.createDataFrame([], df.schema), key=key),
+            JsonDirSink(str(tmp_path / "sink" / kind)),
+        )
+        export_with_observed_metrics(df, str(tmp_path / "catalog" / kind))
+    assert calls.value == n_users, (
+        f"t_user evaluated {calls.value / n_users:.2f}× per row"
+    )
